@@ -18,18 +18,14 @@ import org.apache.spark.SparkContext
 object Pinned {
   private val ids = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
 
-  /** Run `body` (which is expected to persist/checkpoint RDDs) and pin
-    * every RDD id that became persistent during it. Over-pinning a
-    * concurrent query's block is harmless (one extra survivor); graft
-    * entry points run queries sequentially anyway.
-    */
-  def pinning[T](sc: SparkContext)(body: => T): T =
-    pinningTracked(sc)(body)._1
-
-  /** `pinning` that also RETURNS the pinned id set, so a memo that
-    * replaces an entry (source-table rewrite detected by fingerprint)
-    * can `release` the superseded entry's blocks instead of leaking
-    * one pinned checkpoint per rewrite for the session's lifetime.
+  /** Run `body` (which is expected to persist/checkpoint RDDs), pin
+    * every RDD id that became persistent during it, and return that id
+    * set, so a memo that replaces an entry (`SourceMemo`'s release
+    * hook) can `release` the superseded entry's blocks instead of
+    * leaking one pinned checkpoint per rewrite for the session's
+    * lifetime. Over-pinning a concurrent query's block is harmless
+    * (one extra survivor); graft entry points run queries sequentially
+    * anyway.
     */
   def pinningTracked[T](sc: SparkContext)(body: => T): (T, Set[Int]) = {
     val before = sc.getPersistentRDDs.keySet

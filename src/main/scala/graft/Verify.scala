@@ -25,17 +25,20 @@ object Verify {
       require(names.nonEmpty && unknown.isEmpty,
         s"GRAFT_VERIFY_ONLY: empty or unknown queries: ${unknown.mkString(",")}")
     }
-    SparkEntry.queries
+    val selected = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    val failed = selected.toSeq.flatMap { case (name, fn) =>
       // same hygiene as Bench: checkpoint-heavy queries persist blocks
       // they never release, and 185 accumulated chains pressure the
       // storage pool for later queries; pinned session memos survive
       Pinned.dropUnpinned(spark.sparkContext)
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -50,9 +53,19 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+    // oracles of the selected queries only: the checker reports every
+    // oracle key without an output dir as missing
     val json = SparkEntry.oracleSql
+      .filter { case (k, _) => selected.contains(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    // a query that threw wrote no dir: name every one and exit 1, so a
+    // gate can never count a query that never ran
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} of ${selected.size} " +
+        s"queries failed: ${failed.mkString(",")}")
+      sys.exit(1)
+    }
   }
 }

@@ -17,20 +17,22 @@ object EtlOps {
   /** Session-scoped memo for expensive fixture states shared by several
     * queries (the golden initial-load snapshot, the scale snapshot):
     * each query still *means* what its name says — q_etl_cdc_batch
-    * measures a CDC cycle, not a repeated initial load.
+    * measures a CDC cycle, not a repeated initial load. Keyed by the
+    * session object itself (identity equality), so a checkpoint from a
+    * stopped context is never handed to a new session. The eager
+    * checkpoint's blocks are PINNED: lineage is truncated, so a
+    * cross-query cleanup (Bench.dropUnpinned) dropping them would hand
+    * out an unrecoverable frame.
     */
-  // keyed by the session object itself (identity equality): no hash
-  // collision can hand a checkpoint from a stopped context to a new
-  // session; retention is bounded by the number of sessions in the JVM
-  private val memo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), org.apache.spark.sql.Dataset[Directory.Entry]]()
-  // the eager checkpoint's blocks are PINNED: lineage is truncated, so
-  // if a cross-query cleanup (Bench.dropUnpinned) dropped them the memo
-  // would hand out an unrecoverable frame
-  private def memoized(s: SparkSession, key: String)(
+  private val memo = new graft.SourceMemo[(SparkSession, String),
+      (org.apache.spark.sql.Dataset[Directory.Entry], Set[Int])]({
+    case (ds, pinned) =>
+      graft.Pinned.release(ds.sparkSession.sparkContext, pinned)
+  })
+  private def memoized(s: SparkSession, key: String, source: String)(
       f: => org.apache.spark.sql.Dataset[Directory.Entry]) =
-    memo.computeIfAbsent((s, key), _ =>
-      graft.Pinned.pinning(s.sparkContext)(f.localCheckpoint(true)))
+    memo((s, key), source, Nil)(
+      graft.Pinned.pinningTracked(s.sparkContext)(f.localCheckpoint(true)))._1
 
   /** Full initial_load against the reference fixtures; returns the
     * canonical dump as one row per directory entry (deterministic).
@@ -106,7 +108,9 @@ object EtlOps {
       .filter(!col("pk_uniqueid").isin(4731.0, 4732.0))
     val conf = EtlConf(baseDn = "ou=user,ou=ph08,o=BMUKK",
       cryptoIvHex = Some("0" * 32))
-    val snap = memoized(s, "golden_load") {
+    val inputs = Seq("ldapII.txt", "initial_data.csv")
+      .map(new java.io.File(refData, _))
+    val snap = memoized(s, "golden_load", graft.SourceMemo.print(inputs)) {
       InitialLoad.run(pre, users0, conf).snapshot
     }
     val cs = EtlSchema.readUsersCsv(s, s"$refData/changeset01.csv")
@@ -141,12 +145,12 @@ object EtlOps {
       .orderBy("dn")
   }
 
-  // per-(pid, dataset) snapshot-store staging memo for the CDF query,
-  // keyed by store dir → source-table fingerprint (same protocol as
-  // StreamToolOps.sliceMemo): bench reps re-run the CDF join against
-  // the staged versions instead of re-writing them
-  private val cdfMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** Staged fixture stores and zones, keyed by staging path; the
+    * source fingerprint is the customer table they derive from. Bench
+    * reps re-run the queries against the staged versions instead of
+    * re-writing them.
+    */
+  private val stagedMemo = graft.SourceMemo[String, Unit]()
 
   /** Snapshot change-data-feed (`Directory.changes`) between two
     * retained store versions, the classified rows oracle-checked
@@ -172,28 +176,13 @@ object EtlOps {
     */
   private def stagedCdfStore(s: SparkSession, d: String): String = {
     import s.implicits._
-    val dir = tmpPath("graft_cdfstore_", d)
-    val fp = graft.Tables.fingerprint(d, "customer")
-    cdfMemo.compute(dir, (_, prev) => {
-      // a matching fingerprint only proves WE staged this store in this
-      // JVM — not that it still exists: /tmp reapers can clean the dir
-      // mid-session, after which every rep would throw in
-      // Directory.versions instead of re-staging. Checking only the
-      // pointer file was not enough (round 19): a reaper that removed
-      // the version DATA dirs but left CURRENT — or swept one of the
-      // two retained versions — still passed, and every rep then threw
-      // in loadVersion. `Directory.versions` lists only versions whose
-      // data dir is actually on disk, so >= 2 retained versions plus a
-      // live pointer is the full precondition the CDF queries consume.
-      if (prev == fp && new java.io.File(dir, "CURRENT").exists()
-          && Directory.versions(dir).size >= 2) prev
-      else {
-        Directory.deleteRecursively(new java.io.File(dir))
-        Directory.save(cdfVersion(s, d, 3, gen = 1), dir, retain = 2)
-        Directory.save(cdfVersion(s, d, 7, gen = 2), dir, retain = 2)
-        fp
-      }
-    })
+    val dir = graft.SourceMemo.stagingDir("graft_cdfstore_", d)
+    stagedMemo(dir, graft.Tables.fingerprint(d, "customer"),
+        Seq(new java.io.File(dir))) {
+      Directory.deleteRecursively(new java.io.File(dir))
+      Directory.save(cdfVersion(s, d, 3, gen = 1), dir, retain = 2)
+      Directory.save(cdfVersion(s, d, 7, gen = 2), dir, retain = 2)
+    }
     dir
   }
 
@@ -225,12 +214,6 @@ object EtlOps {
       .as[Directory.Entry]
   }
 
-  // staged BUCKETED versions for the zero-exchange CDF path: catalog
-  // table names, memoized like cdfMemo (re-staged when the source
-  // fingerprint changes or the tables fell out of the catalog)
-  private val cdfBucketMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Stage the same two synthetic versions as dn-bucketed catalog
     * tables (the `Directory.saveBucketed` layout); returns
     * (fromTable, toTable) for `Directory.changesBucketed`. Table names
@@ -239,20 +222,14 @@ object EtlOps {
     */
   private[graft] def stagedCdfBucketedTables(s: SparkSession, d: String)
       : (String, String) = {
-    val ns = ProcessHandle.current().pid() + "_" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    val (t1, t2) = (s"graft_cdf_${ns}_v1", s"graft_cdf_${ns}_v2")
-    val fp = graft.Tables.fingerprint(d, "customer")
-    cdfBucketMemo.compute(ns, (_, prev) => {
-      if (prev == fp && s.catalog.tableExists(t1) && s.catalog.tableExists(t2))
-        prev
-      else {
-        Directory.saveBucketed(cdfVersion(s, d, 3, gen = 1), t1)
-        Directory.saveBucketed(cdfVersion(s, d, 7, gen = 2), t2)
-        fp
-      }
-    })
+    val ns =
+      new java.io.File(graft.SourceMemo.stagingDir("graft_cdf_", d)).getName
+    val (t1, t2) = (s"${ns}_v1", s"${ns}_v2")
+    stagedMemo(ns, graft.Tables.fingerprint(d, "customer"),
+        Seq(t1, t2).map(graft.SourceMemo.tableDir(s, _))) {
+      Directory.saveBucketed(cdfVersion(s, d, 3, gen = 1), t1)
+      Directory.saveBucketed(cdfVersion(s, d, 7, gen = 2), t2)
+    }
     (t1, t2)
   }
 
@@ -474,7 +451,7 @@ object EtlOps {
     */
   def etlCompact(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dir = tmpPath("graft_compactstore_", d)
+    val dir = graft.SourceMemo.stagingDir("graft_compactstore_", d)
     Directory.deleteRecursively(new java.io.File(dir))
     val entries = graft.Tables.customer(s, d)
       .select(
@@ -499,12 +476,6 @@ object EtlOps {
         col("n_rows_prev"))
   }
 
-  // streaming-MV staging memo: 3-version store + CDF landing zone,
-  // keyed zone dir → source fingerprint (the cdfMemo protocol,
-  // including the reaper-intact re-checks)
-  private val mvMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Stage (once per JVM, dataset, source fingerprint) the continuous-
     * maintenance fixture: a 3-version snapshot store (gen-1/2/3
     * synthetic versions — each commit inserts, deletes, AND updates)
@@ -514,47 +485,39 @@ object EtlOps {
     * change stream would deliver it. Returns (storeDir, zoneDir).
     */
   private def stagedMvZone(s: SparkSession, d: String): (String, String) = {
-    val dir = tmpPath("graft_mvstore_", d)
-    val zone = tmpPath("graft_mvcdf_", d)
-    val fp = graft.Tables.fingerprint(d, "customer")
-    mvMemo.compute(zone, (_, prev) => {
-      val intact = new java.io.File(dir, "CURRENT").exists() &&
-        Directory.versions(dir).size >= 3 &&
-        Option(new java.io.File(zone).listFiles()).exists(_.count(f =>
-          f.getName.startsWith("cdf-") && f.getName.endsWith(".parquet")) == 2)
-      if (prev == fp && intact) prev
-      else {
-        Directory.deleteRecursively(new java.io.File(dir))
-        Directory.deleteRecursively(new java.io.File(zone))
-        java.nio.file.Files.createDirectories(
-          new java.io.File(zone).toPath)
-        Directory.save(cdfVersion(s, d, 3, gen = 1), dir, retain = 2)
-        Directory.save(cdfVersion(s, d, 7, gen = 2), dir, retain = 2)
-        Directory.save(cdfVersion(s, d, 1, gen = 3), dir, retain = 2)
-        val vs = Directory.versions(dir).reverse // oldest first
-        vs.zip(vs.tail).zipWithIndex.foreach { case ((from, to), i) =>
-          val stage = new java.io.File(zone + s".stage$i")
-          Directory.changes(s, dir, from, to)
-            .coalesce(1).write.mode("overwrite").parquet(stage.getPath)
-          val part = Option(stage.listFiles()).getOrElse(Array.empty)
-            .find(f => f.getName.startsWith("part-")
-              && f.getName.endsWith(".parquet"))
-            .getOrElse(sys.error(s"no parquet part written under $stage"))
-          val dest = new java.io.File(zone, f"cdf-$i%03d.parquet")
-          java.nio.file.Files.move(part.toPath, dest.toPath,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          Directory.deleteRecursively(stage)
-          // fixed ascending mtimes in commit order (the
-          // streamSessionAppend protocol): the file-stream lister
-          // orders arrival by modification time, and commit order is
-          // the one order under which the ± fold is the change feed
-          require(dest.setLastModified(1000000000000L + i * 2000L),
-            s"setLastModified failed on $dest — commit-order replay " +
-              "cannot be guaranteed on this filesystem")
-        }
-        fp
+    val dir = graft.SourceMemo.stagingDir("graft_mvstore_", d)
+    val zone = graft.SourceMemo.stagingDir("graft_mvcdf_", d)
+    stagedMemo(zone, graft.Tables.fingerprint(d, "customer"),
+        Seq(new java.io.File(dir), new java.io.File(zone))) {
+      Directory.deleteRecursively(new java.io.File(dir))
+      Directory.deleteRecursively(new java.io.File(zone))
+      java.nio.file.Files.createDirectories(
+        new java.io.File(zone).toPath)
+      Directory.save(cdfVersion(s, d, 3, gen = 1), dir, retain = 2)
+      Directory.save(cdfVersion(s, d, 7, gen = 2), dir, retain = 2)
+      Directory.save(cdfVersion(s, d, 1, gen = 3), dir, retain = 2)
+      val vs = Directory.versions(dir).reverse // oldest first
+      vs.zip(vs.tail).zipWithIndex.foreach { case ((from, to), i) =>
+        val stage = new java.io.File(zone + s".stage$i")
+        Directory.changes(s, dir, from, to)
+          .coalesce(1).write.mode("overwrite").parquet(stage.getPath)
+        val part = Option(stage.listFiles()).getOrElse(Array.empty)
+          .find(f => f.getName.startsWith("part-")
+            && f.getName.endsWith(".parquet"))
+          .getOrElse(sys.error(s"no parquet part written under $stage"))
+        val dest = new java.io.File(zone, f"cdf-$i%03d.parquet")
+        java.nio.file.Files.move(part.toPath, dest.toPath,
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        Directory.deleteRecursively(stage)
+        // fixed ascending mtimes in commit order (the
+        // streamSessionAppend protocol): the file-stream lister
+        // orders arrival by modification time, and commit order is
+        // the one order under which the ± fold is the change feed
+        require(dest.setLastModified(1000000000000L + i * 2000L),
+          s"setLastModified failed on $dest — commit-order replay " +
+            "cannot be guaranteed on this filesystem")
       }
-    })
+    }
     (dir, zone)
   }
 
@@ -622,17 +585,6 @@ object EtlOps {
       col("msum").as("sum_weight"))
       .orderBy("segment")
   }
-
-  /** Per-(pid, dataset) tmp path for staged fixture stores — shared by
-    * every staging memo so two datasets benched in one JVM can never
-    * alias each other's zones.
-    */
-  private def tmpPath(prefix: String, d: String): String =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      prefix + ProcessHandle.current().pid() + "_" +
-        java.security.MessageDigest.getInstance("MD5")
-          .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString
-          .take(12)).getPath
 
   /** Synthetic user table derived from the sf-scaled customer table so
     * the MERGE/CDC engines can be benchmarked at data scale (the
@@ -706,7 +658,8 @@ object EtlOps {
   def etlScaleCdc(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val users = syntheticUsers(s, d)
-    val snap = memoized(s, s"scale_load_$d") {
+    val snap = memoized(s, s"scale_load_$d",
+        graft.Tables.fingerprint(d, "customer")) {
       import s.implicits._
       InitialLoad.run(s.emptyDataset[Directory.Entry], users, scaleConf).snapshot
     }

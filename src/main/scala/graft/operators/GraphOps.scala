@@ -81,25 +81,17 @@ object GraphOps {
     * and the derivation's CPU weight made the whole q_g* cluster
     * volatile under box contention (r9–r11).
     *
-    * Keying discipline matches the streaming memos: the map key is the
-    * session object (identity — never hand a stopped context's
-    * checkpoint to a new session) plus the dataset DIR; the entry
-    * carries a file-metadata fingerprint of the SOURCE table
-    * (Tables.fingerprint), and a fingerprint mismatch REPLACES the
-    * entry — releasing the superseded pinned blocks first, so an
-    * in-JVM rewrite of the lineitem fixture re-derives instead of
-    * replaying stale edges AND never leaks a dead checkpoint per
-    * rewrite. Blocks are PINNED: the checkpoint's lineage is
-    * truncated, so a cross-query cleanup (Bench.dropUnpinned) dropping
-    * them would hand out an unrecoverable frame; the inner
-    * pre-threshold pair-count cache is explicitly released after the
-    * edge count materializes, so only the edge list itself stays in
-    * session storage.
+    * Keyed by (session, dataset dir): a stopped context's checkpoint
+    * is never handed to a new session. Blocks are PINNED — the
+    * checkpoint's lineage is truncated, so a cross-query cleanup
+    * (Bench.dropUnpinned) dropping them would hand out an
+    * unrecoverable frame — and a superseded entry releases them.
     */
-  private final case class EdgeEntry(fp: String, edges: DataFrame,
-      n: Long, pinned: Set[Int])
-  private val edgeMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), EdgeEntry]()
+  private final case class EdgeEntry(edges: DataFrame, n: Long,
+      pinned: Set[Int])
+  private val edgeMemo =
+    new graft.SourceMemo[(SparkSession, String), EdgeEntry](e =>
+      graft.Pinned.release(e.edges.sparkSession.sparkContext, e.pinned))
 
   /** One full UN-memoized derivation (checkpoint + count + release) —
     * the pricing hook for GateCheck's `edges_build` row: with the
@@ -117,25 +109,20 @@ object GraphOps {
 
   private[operators] def affinityEdges(s: SparkSession, d: String)
       : (DataFrame, Long) = {
-    val fp = graft.Tables.fingerprint(d, "lineitem")
-    val entry = edgeMemo.compute((s, d), (_, prev) => {
-      if (prev != null && prev.fp == fp) prev
-      else {
-        if (prev != null) graft.Pinned.release(s.sparkContext, prev.pinned)
-        val ((e, n), pinned) =
-          graft.Pinned.pinningTracked(s.sparkContext) {
-            val (edges, scratch) = coEdges(s, d)
-            val e = edges.localCheckpoint(true) // sa < sb
-            val n = e.count()
-            // the pre-threshold pair-count cache only serves the build;
-            // free it so the memo pins nothing but the edge list (its
-            // id may land in the pinned set — a dead id is harmless)
-            scratch.unpersist(blocking = false)
-            (e, n)
-          }
-        EdgeEntry(fp, e, n, pinned)
+    val entry = edgeMemo((s, d), graft.Tables.fingerprint(d, "lineitem"),
+        Nil) {
+      val ((e, n), pinned) = graft.Pinned.pinningTracked(s.sparkContext) {
+        val (edges, scratch) = coEdges(s, d)
+        val e = edges.localCheckpoint(true) // sa < sb
+        val n = e.count()
+        // the pre-threshold pair-count cache only serves the build;
+        // free it so the memo pins nothing but the edge list (its id
+        // may land in the pinned set — a dead id is harmless)
+        scratch.unpersist(blocking = false)
+        (e, n)
       }
-    })
+      EdgeEntry(e, n, pinned)
+    }
     (entry.edges, entry.n)
   }
 

@@ -13,64 +13,31 @@ object StreamToolOps {
 
   private val refData = "/root/reference/testdata"
 
-  /** Staged-landing-zone paths already written this JVM (see
-    * streamSessionAppend — per-pid tmp paths, so no cross-process
-    * aliasing), keyed path → SOURCE-table fingerprint
-    * (Tables.fingerprint — the shared memo rule): a path-only memo
-    * silently replayed stale slices when the events table at the same
-    * dir was rewritten in-JVM (fixture regeneration, a spec writing
-    * twice to one tmp dir). An entry appears only AFTER the staging
-    * write + mtime stamping completes (compute() adds nothing on
-    * throw), so a failed write can never leave a memoized
-    * partial/missing zone.
+  /** Staged landing zones, keyed by zone path; the source
+    * fingerprint is the table the zone is staged from.
     */
-  private val sliceMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** File-metadata fingerprint of the source events table — same print
-    * EventStream.spanMemo keys on, so the two replay memos can never
-    * disagree about whether a rewrite happened.
-    */
-  private def eventsFingerprint(d: String): String =
-    graft.Tables.fingerprint(d, "events")
+  private val sliceMemo = graft.SourceMemo[String, Unit]()
 
   /** Stage the documents table as a JSONL landing zone ONCE per (JVM,
-    * dataset, source version) — the sliceMemo discipline applied to
-    * the JSONL ingest queries: the dump is zone SETUP (what a real
+    * dataset, source version): the dump is zone SETUP (what a real
     * landing zone already holds when the stream attaches), not ingest
     * cost, and re-writing it inside every timed rep priced the setup
     * three times over per bench query (guide §1.4 — time the
-    * computation, not the fixture staging). Same hardening as
-    * sliceMemo: fingerprint-keyed against source rewrites, re-stages
-    * when a /tmp reaper removed the zone, no memo entry on a failed
-    * write. Results are unaffected: the drained dedup/summary are
-    * arrival-order-independent (md5-keyed dropDuplicates + per-source
-    * aggregates), so replaying the same staged files yields the same
-    * table whether the zone was written this rep or a previous one.
+    * computation, not the fixture staging). Results are unaffected:
+    * the drained dedup/summary are arrival-order-independent
+    * (md5-keyed dropDuplicates + per-source aggregates), so replaying
+    * the same staged files yields the same table whether the zone was
+    * written this rep or a previous one.
     */
   private def stagedDocsJsonl(s: SparkSession, d: String, tag: String,
       gz: Boolean = false): String = {
     val path = graft.tools.JsonlTools.dumpDir(d, tag)
-    val fp = graft.Tables.fingerprint(d, "documents")
-    val ext = if (gz) ".json.gz" else ".json"
-    def staged(): Int =
-      Option(new java.io.File(path).listFiles())
-        .getOrElse(Array.empty)
-        .count(f => f.getName.startsWith("part-") && f.getName.endsWith(ext))
-    sliceMemo.compute(path, (_, prev) => {
-      // memo value carries the STAGED FILE COUNT next to the source
-      // fingerprint (round 20, ADVICE): an any-one-part-survives check
-      // silently replayed a partially reaped zone with missing
-      // documents — a hit now requires the full staged set on disk
-      val n = staged()
-      if (prev != null && prev == s"$fp|$n" && n > 0) prev
-      else {
-        val docs = graft.Tables.documents(s, d)
-        if (gz) graft.tools.JsonlTools.writeJsonlGz(docs, path)
-        else graft.tools.JsonlTools.writeJsonl(docs, path)
-        s"$fp|${staged()}"
-      }
-    })
+    sliceMemo(path, graft.Tables.fingerprint(d, "documents"),
+        Seq(new java.io.File(path))) {
+      val docs = graft.Tables.documents(s, d)
+      if (gz) graft.tools.JsonlTools.writeJsonlGz(docs, path)
+      else graft.tools.JsonlTools.writeJsonl(docs, path)
+    }
     path
   }
 
@@ -218,56 +185,36 @@ object StreamToolOps {
   def streamSessionAppend(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.types.{StructType, StructField, LongType,
       TimestampType}
-    val path = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_evslices_" + ProcessHandle.current().pid() + "_" +
-        java.security.MessageDigest.getInstance("MD5")
-          .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString
-          .take(12)).getPath
+    val path = graft.SourceMemo.stagingDir("graft_evslices_", d)
     // stage the landing zone ONCE per (JVM, dataset, source version):
     // repeated executions (bench reps) stream from the same staged
     // slices instead of re-writing them — the write is zone setup, not
-    // ingest cost. compute() re-stages when the SOURCE fingerprint
-    // changed, and adds no memo entry if the staging throws.
-    val fp = eventsFingerprint(d)
-    def stagedParts(): Int =
-      Option(new java.io.File(path).listFiles())
-        .getOrElse(Array.empty)
-        .count(f => f.getName.startsWith("part-")
-          && f.getName.endsWith(".parquet"))
-    sliceMemo.compute(path, (_, prev) => {
-      // same hardening as EtlOps.cdfMemo: the fingerprint proves we
-      // staged the zone, not that a /tmp reaper hasn't since removed
-      // it. The memo value carries the STAGED SLICE COUNT (round 20,
-      // ADVICE): a partially reaped zone replayed with missing slices
-      // would silently drop sessions — a hit requires the full set.
-      val n = stagedParts()
-      if (prev != null && prev == s"$fp|$n" && n > 0) prev
-      else {
-        graft.Tables.events(s, d).select(col("user_id"), col("ts"))
-          .repartitionByRange(4, col("ts"))
-          .write.mode("overwrite").parquet(path)
-        // the file-stream source orders arrival by MODIFICATION TIME,
-        // and one write job stamps every part file with the same
-        // second — a tie the lister breaks arbitrarily, which scrambled
-        // the replay into event-time disorder (early sessions dropped
-        // below the watermark). Stamp strictly ascending mtimes in part
-        // order (part index = range-partition index = time order) so
-        // arrival order is deterministically event-time order.
-        val parts = new java.io.File(path).listFiles()
-          .filter(f => f.getName.startsWith("part-")
-            && f.getName.endsWith(".parquet")).sortBy(_.getName)
-        val base = System.currentTimeMillis() - parts.length * 2000L
-        parts.zipWithIndex.foreach { case (f, i) =>
-          // a silent stamp failure degrades to the scrambled same-second
-          // ordering above — fail fast instead of dropping early
-          // sessions below the watermark
-          require(f.setLastModified(base + i * 2000L),
-            s"setLastModified failed on $f — replay ordering would be " +
-              "event-time-scrambled; filesystem does not support mtime stamping")
-        }
-        s"$fp|${parts.length}"
+    // ingest cost
+    sliceMemo(path, graft.Tables.fingerprint(d, "events"),
+        Seq(new java.io.File(path))) {
+      graft.Tables.events(s, d).select(col("user_id"), col("ts"))
+        .repartitionByRange(4, col("ts"))
+        .write.mode("overwrite").parquet(path)
+      // the file-stream source orders arrival by MODIFICATION TIME,
+      // and one write job stamps every part file with the same
+      // second — a tie the lister breaks arbitrarily, which scrambled
+      // the replay into event-time disorder (early sessions dropped
+      // below the watermark). Stamp strictly ascending mtimes in part
+      // order (part index = range-partition index = time order) so
+      // arrival order is deterministically event-time order.
+      val parts = new java.io.File(path).listFiles()
+        .filter(f => f.getName.startsWith("part-")
+          && f.getName.endsWith(".parquet")).sortBy(_.getName)
+      val base = System.currentTimeMillis() - parts.length * 2000L
+      parts.zipWithIndex.foreach { case (f, i) =>
+        // a silent stamp failure degrades to the scrambled same-second
+        // ordering above — fail fast instead of dropping early
+        // sessions below the watermark
+        require(f.setLastModified(base + i * 2000L),
+          s"setLastModified failed on $f — replay ordering would be " +
+            "event-time-scrambled; filesystem does not support mtime stamping")
       }
-    })
+    }
     val schema = StructType(Seq(
       StructField("user_id", LongType), StructField("ts", TimestampType)))
     drain(s, { ss =>
@@ -445,14 +392,6 @@ object StreamToolOps {
       // semantics never reads
       ss.conf.set("spark.sql.streaming.stateStore.rocksdb" +
         ".trackTotalNumberOfRows", "false")
-      // dev-only sweep hook (round 20): GRAFT_RDB_SWEEP=k=v,k=v applies
-      // extra rocksdb provider confs for isolated A/Bs; unset in every
-      // driver/bench run
-      sys.env.get("GRAFT_RDB_SWEEP").foreach(
-        _.split(",").filter(_.contains("=")).foreach { kv =>
-          val Array(k, v) = kv.split("=", 2)
-          ss.conf.set(s"spark.sql.streaming.stateStore.rocksdb.$k", v)
-        })
       // Recorded decision on this row's 26.5 s sf1 sweep cost (round
       // 16): KEPT at the shared default drain. The hypothesis that the
       // cost is per-trigger instance constants was MEASURED false —

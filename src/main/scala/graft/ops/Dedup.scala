@@ -622,9 +622,6 @@ object Dedup {
         .first().getLong(0) == 0L
       labels = jumped.drop("old_label")
       iter += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round $iter converged=$converged " +
-          s"t=${System.nanoTime() / 1000000}ms")
     }
     }
     if (!converged)

@@ -336,9 +336,8 @@ object Similarity {
     * build-time-eagerness ADVICE on the old N-count applies only to
     * the first build per session).
     */
-  private final case class CentEntry(fp: String, cents: DataFrame, k: Long)
-  private val centMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), CentEntry]()
+  private val centMemo =
+    graft.SourceMemo[(SparkSession, String), (DataFrame, Long)]()
 
   /** Lloyd iteration count — FIXED at 2, not a conf: the DuckDB oracle
     * unrolls exactly this many update rounds (dedupCellSql splices
@@ -349,60 +348,55 @@ object Similarity {
 
   private[ops] def trainedCells(s: SparkSession, d: String)
       : (DataFrame, Long) = {
-    val fp = graft.Tables.fingerprint(d, "embeddings")
-    val entry = centMemo.compute((s, d), (_, prev) => {
-      if (prev != null && prev.fp == fp) prev
-      else {
-        // superseded entries carry no storage (the centroid frame is a
-        // local relation; the training scratch was released inside the
-        // build) — replacement is just a map update
-        val vecs = embeddings(s, d)
-          .select(col("vec_id"), Clustering.microVec(col("embedding"))
-            .as("m"))
-          .localCheckpoint(true)
-        val k = dedupCells(vecs.count())
-        val iters = kmeansIters
-        // centroid frames are k-row LOCAL relations at every step (the
-        // seed is a bounded k-row collect, updates come from the k·dims
-        // aggregation collect) — no checkpoint, no storage, and no
-        // lineage into the training scratch frame, so releasing `vecs`
-        // below is safe regardless of the iteration count
-        var cents = s.createDataFrame(
-          vecs.filter(col("vec_id") < k)
-            .select(col("vec_id"), col("m")).collect()
-            .map(r => (r.getLong(0), r.getSeq[Long](1)))
-            .sortBy(_._1).toSeq)
-          .toDF("cid", "cm")
-        for (_ <- 1 to iters) {
-          val asg = vecs.crossJoin(broadcast(cents))
-            .withColumn("d2",
-              graft.functions.LongVecExprs.sqDist(col("m"), col("cm")))
-            .groupBy(col("vec_id"))
-            .agg(min(struct(col("d2"), col("cid"))).as("b"),
-              first(col("m")).as("m"))
-            .select(col("b.cid").as("cid"), col("m"))
-          val rows = asg
-            .select(col("cid"), posexplode(col("m")).as(Seq("dim", "v")))
-            .groupBy("cid", "dim")
-            .agg(sum(col("v")).as("sv"), count(lit(1)).as("n"))
-            .collect() // bounded: ≤ k·dims rows, never O(N)
-            .map(r => (r.getLong(0), r.getInt(1),
-              // HALF_UP (ties away from zero) — matches SQL round();
-              // math.round breaks ties toward +inf on negatives
-              BigDecimal(r.getLong(2).toDouble / r.getLong(3))
-                .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong))
-          val next = rows.groupBy(_._1).toSeq.map { case (cid, rs) =>
-            (cid, rs.sortBy(_._2).map(_._3).toSeq)
-          }.sortBy(_._1)
-          cents = s.createDataFrame(next).toDF("cid", "cm")
-        }
-        // the training scratch frame is not read after the block —
-        // release it so the memo holds no session storage at all
-        vecs.unpersist(blocking = false)
-        CentEntry(fp, cents, k)
+    // superseded entries carry no storage (the centroid frame is a
+    // local relation; the training scratch is released inside the
+    // build) — replacement is just a map update
+    centMemo((s, d), graft.Tables.fingerprint(d, "embeddings"), Nil) {
+      val vecs = embeddings(s, d)
+        .select(col("vec_id"), Clustering.microVec(col("embedding"))
+          .as("m"))
+        .localCheckpoint(true)
+      val k = dedupCells(vecs.count())
+      val iters = kmeansIters
+      // centroid frames are k-row LOCAL relations at every step (the
+      // seed is a bounded k-row collect, updates come from the k·dims
+      // aggregation collect) — no checkpoint, no storage, and no
+      // lineage into the training scratch frame, so releasing `vecs`
+      // below is safe regardless of the iteration count
+      var cents = s.createDataFrame(
+        vecs.filter(col("vec_id") < k)
+          .select(col("vec_id"), col("m")).collect()
+          .map(r => (r.getLong(0), r.getSeq[Long](1)))
+          .sortBy(_._1).toSeq)
+        .toDF("cid", "cm")
+      for (_ <- 1 to iters) {
+        val asg = vecs.crossJoin(broadcast(cents))
+          .withColumn("d2",
+            graft.functions.LongVecExprs.sqDist(col("m"), col("cm")))
+          .groupBy(col("vec_id"))
+          .agg(min(struct(col("d2"), col("cid"))).as("b"),
+            first(col("m")).as("m"))
+          .select(col("b.cid").as("cid"), col("m"))
+        val rows = asg
+          .select(col("cid"), posexplode(col("m")).as(Seq("dim", "v")))
+          .groupBy("cid", "dim")
+          .agg(sum(col("v")).as("sv"), count(lit(1)).as("n"))
+          .collect() // bounded: ≤ k·dims rows, never O(N)
+          .map(r => (r.getLong(0), r.getInt(1),
+            // HALF_UP (ties away from zero) — matches SQL round();
+            // math.round breaks ties toward +inf on negatives
+            BigDecimal(r.getLong(2).toDouble / r.getLong(3))
+              .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong))
+        val next = rows.groupBy(_._1).toSeq.map { case (cid, rs) =>
+          (cid, rs.sortBy(_._2).map(_._3).toSeq)
+        }.sortBy(_._1)
+        cents = s.createDataFrame(next).toDF("cid", "cm")
       }
-    })
-    (entry.cents, entry.k)
+      // the training scratch frame is not read after the block —
+      // release it so the memo holds no session storage at all
+      vecs.unpersist(blocking = false)
+      (cents, k)
+    }
   }
 
   /** Final assignment against the trained centroids: same plan shape

@@ -125,32 +125,18 @@ object EventStream {
     * the replay size — which a drain holds anyway. A LIVE deployment
     * keeps a small watermark because its disorder bound is genuinely
     * small; the bound is a property of the ARRIVAL ORDER, not of the
-    * query. Memoized per dir (pure file metadata).
+    * query. Memoized per dir: the SPAN is data-derived, so a rewritten
+    * table must re-probe or the watermark silently shrinks below the
+    * new disorder bound.
     */
-  // one entry PER DIR — (fingerprint, span), replaced on fingerprint
-  // mismatch — so table rewrites at one path never accumulate stale
-  // entries (unbounded growth in a long-lived session)
-  private val spanMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
+  private val spanMemo = graft.SourceMemo[String, Long]()
   def replayWatermark(spark: SparkSession, dir: String, marginSec: Long = 600L): String = {
-    // memo entry carries the shared file-metadata fingerprint
-    // (Tables.fingerprint), not just the path: the SPAN is data-
-    // derived, and a rewritten/extended table at the same path (fixture
-    // regeneration, a spec writing twice to one tmp dir) must re-probe
-    // or the watermark silently shrinks below the new disorder bound —
-    // the exact cross-trigger drop class this method exists to prevent.
-    val fp = Tables.fingerprint(dir, "events")
-    val span = spanMemo.compute(dir, (_, prev) => {
-      if (prev != null && prev._1 == fp) prev
-      else {
-        val r = Tables.events(spark, dir)
-          .agg(min(col("ts_ns")).as("lo"), max(col("ts_ns")).as("hi")).head()
-        val s =
-          if (r.isNullAt(0)) 0L
-          else (r.getLong(1) - r.getLong(0)) / 1000000000L + 1L
-        (fp, s)
-      }
-    })._2
+    val span = spanMemo(dir, Tables.fingerprint(dir, "events"), Nil) {
+      val r = Tables.events(spark, dir)
+        .agg(min(col("ts_ns")).as("lo"), max(col("ts_ns")).as("hi")).head()
+      if (r.isNullAt(0)) 0L
+      else (r.getLong(1) - r.getLong(0)) / 1000000000L + 1L
+    }
     s"${span + marginSec} seconds"
   }
 

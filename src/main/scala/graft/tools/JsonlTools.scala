@@ -81,11 +81,7 @@ object JsonlTools {
     * target either.
     */
   def dumpDir(d: String, tag: String = "batch"): String =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_jsonl_" + ProcessHandle.current().pid() + "_" +
-        java.security.MessageDigest.getInstance("MD5")
-          .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString
-          .take(16) + "_" + tag).getPath
+    graft.SourceMemo.stagingDir("graft_jsonl_", d) + "_" + tag
 
   /** Round-trip audit: dump the documents table to JSONL, read it
     * back under the enforced schema, and report per-source exact

@@ -79,4 +79,48 @@ class ScaleJoinsSpec extends AnyFunSuite {
     assert(got.nonEmpty, "sequential names must yield distance-1 pairs")
     assert(got == plain)
   }
+
+  // Staged tables outlive a query, and a tmp-dir reaper (or a managed-
+  // table cleanup) can remove part of them between two runs. A partly
+  // reaped staging must re-stage: reusing it fails the query on a
+  // cached file listing, and silently drops rows on a fresh one.
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
+    df.collect().map(_.toSeq.mkString("|")).toSet
+
+  /** Delete one parquet part file under `table` and return its name. */
+  private def reapOnePart(table: java.io.File): String = {
+    val part = Option(table.listFiles()).getOrElse(Array.empty)
+      .filter(f => f.getName.startsWith("part-")
+        && f.getName.endsWith(".parquet"))
+      .sortBy(_.getName).headOption
+      .getOrElse(fail(s"no staged part file under $table"))
+    assert(part.delete(), s"could not delete $part")
+    part.getName
+  }
+
+  test("q_j13_smb_join re-stages a bucketed table with one part reaped") {
+    val spark = TestSpark.spark
+    val q = ScaleJoins.queries("q_j13_smb_join")
+    val first = rows(q(spark, dir))
+    assert(first.nonEmpty)
+    val lineitem = new java.io.File(
+      graft.tools.JsonlTools.dumpDir(dir, "smb"), "lineitem")
+    val reaped = reapOnePart(lineitem)
+    assert(rows(q(spark, dir)) == first,
+      s"smb join result changed after reaping $reaped")
+  }
+
+  test("q_etl_cdf_bucketed re-stages a managed table with one file reaped") {
+    val spark = TestSpark.spark
+    val q = EtlOps.queries("q_etl_cdf_bucketed")
+    val first = rows(q(spark, dir))
+    assert(first.nonEmpty)
+    val (from, _) = EtlOps.stagedCdfBucketedTables(spark, dir)
+    val table = new java.io.File(spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(from)).location)
+    val reaped = reapOnePart(table)
+    assert(rows(q(spark, dir)) == first,
+      s"bucketed CDF result changed after reaping $reaped")
+  }
 }

@@ -7,7 +7,9 @@ Usage: python3 tools/check.py <sfDir> <verifyOutDir>
 Reads each <verifyOutDir>/<name> parquet dir (written by graft.Verify),
 runs the matching SQL from oracle_sql.json in DuckDB against the same
 parquet tables, sorts columns by name and rows by value, and compares
-cell-exactly. Exit code 1 if any query mismatches.
+cell-exactly. Every oracle_sql.json key with no output dir (a query that
+threw in Verify) is reported as [MISS]. Exit code 1 if any query
+mismatches or is missing.
 """
 import sys, os, json, glob
 import duckdb
@@ -32,6 +34,10 @@ def main(sf_dir, out_dir):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_ok = n_bad = n_skip = 0
+    for name in sorted(oracle):
+        if not os.path.isdir(os.path.join(out_dir, name)):
+            print(f"[MISS] {name}: no output dir (query did not run)")
+            n_bad += 1
     for name in sorted(os.listdir(out_dir)):
         d = os.path.join(out_dir, name)
         if not os.path.isdir(d):
