@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import Directory.Entry
 
 /** §3.1 — the CDC micro-batch: one poll cycle of the reference's `etl`
-  * action (etl.py:576–733) as a set-based pipeline:
+  * action (etl.py:576–733):
   *
   *   garbage-collect → scan ≤N new/errored events → validate (P3, fatal
   *   rows routed to status F, never exceptions) → J1 join to current
@@ -15,10 +15,26 @@ import Directory.Entry
   *   writeback.
   *
   * The reference applies events one at a time and re-reads the current
-  * DB row per event, so replays are idempotent; the set-based engine
-  * exploits exactly that: one MERGE per distinct uid, while the status
-  * matrix still produces a verdict per event (sequencing within a uid is
+  * DB row per event, so replays are idempotent; the engine exploits
+  * exactly that: one MERGE per distinct uid, while the status matrix
+  * still produces a verdict per event (sequencing within a uid is
   * reconstructed from record_id order — SURVEY.md §4.3).
+  *
+  * Two bodies, one semantics, gated on the batch cap:
+  *  - `maxRecords <= localBatchBound` (the poll loop's capped batches):
+  *    the driver-local body (`LocalCycle`). The distributed tables are
+  *    touched by one batch collect, one user lookup, one candidate-entry
+  *    lookup (plus a ph15-twin lookup when the batch deletes), a narrow
+  *    broadcast commit and a broadcast eventlog write-back; everything
+  *    batch-sized in between runs on the collected rows — about 7 Spark
+  *    jobs and no shuffle per cycle, whatever the snapshot size.
+  *  - larger or unbounded caps (`Int.MaxValue`: a full drain, the
+  *    streaming micro-batch, `q_etl_scale_cdc`): the set-based body
+  *    below, whose every step is a join or aggregate over the batch —
+  *    the only body that can run a batch the driver cannot hold.
+  * The status and warning rules (`verdicts`, `failedVerdicts`) and the
+  * write-back are shared Column definitions; `CdcLocalSpec` holds the
+  * two bodies equal on seeded backlogs.
   */
 object Cdc {
   /** Largest batch cap that may FORCE a uid-set broadcast in the batch
@@ -28,50 +44,49 @@ object Cdc {
     */
   val broadcastUidBound: Int = 1 << 20
 
+  /** Largest batch cap that runs the driver-local body. Every event of a
+    * batch can replace at most one entry, and a replacement entry is
+    * ~2 KB, so 1<<15 events keep the commit's broadcast relation of
+    * replacements inside the 64m broadcast threshold the commit relies
+    * on (and the collected batch, user rows and candidate entries
+    * inside a modest driver heap).
+    */
+  val localBatchBound: Int = 1 << 15
 
-  case class CycleResult(
+  /** `selected` is the number of events the cycle picked (its batch
+    * size) — lazy, because only the poll loop's drain rule needs it and
+    * the set-based body pays a count for it. `pendingAfter` is the
+    * eventlog's N/E backlog after the cycle when the body knows it
+    * without a job (the local body on a batch below its cap: every
+    * pending event was selected, so exactly the E verdicts stay
+    * pending); `None` means count the written-back eventlog.
+    */
+  final case class CycleResult(
       snapshot: Dataset[Entry],
       eventlog: DataFrame,        // full table with statuses written back
       eventUpdates: DataFrame,    // record_id, status, error_message, attempt
-      renames: DataFrame)         // old_cn, new_cn queue for ph15 (C3)
+      renames: DataFrame,         // old_cn, new_cn queue for ph15 (C3)
+      pendingAfter: Option[Long] = None)(selectedCount: => Long) {
+    lazy val selected: Long = selectedCount
+  }
 
   private def trimEq(c: Column, v: String): Column =
     graft.functions.ConvertF.char3Eq(c, v)
 
-  /** One poll cycle. `users` is the current user table state; `eventlog`
-    * the current event table; returns the post-cycle snapshot and
-    * eventlog.
+  /** S3 — the work queue: events in status N or E (status flags are the
+    * offsets).
     */
-  def cycle(snapshot0: Dataset[Entry], users: DataFrame, eventlog: DataFrame,
-      conf: EtlConf, maxRecords: Int = 100,
-      readTime: java.sql.Timestamp = new java.sql.Timestamp(System.currentTimeMillis / 1000 * 1000))
-      : CycleResult = {
-    val spark = snapshot0.sparkSession
-    import spark.implicits._
+  private[etl] def pendingEvents(eventlog: DataFrame): DataFrame =
+    eventlog.filter(trimEq(col("status"), "N") || trimEq(col("status"), "E"))
 
-    // C6 — collect already-ETD-synced deleted entries at cycle start;
-    // the reference never garbage-collects the ph15 instance itself
-    // (etl.py:406–407)
-    val snap1 =
-      if (conf.isPh15) snapshot0
-      else SyncEngine.garbageCollect(snapshot0, conf)
-
-    // S3 — bounded work-queue scan (status flags are the offsets). An
-    // unbounded batch (Int.MaxValue) skips the global sort entirely —
-    // the cap exists only to emulate the reference's cycle batching,
-    // and a top-2^31 sort would be pure waste on a process-everything
-    // scan.
-    val pendingEv = eventlog
-      .filter(trimEq(col("status"), "N") || trimEq(col("status"), "E"))
-    val batch =
-      if (maxRecords == Int.MaxValue) pendingEv
-      else pendingEv.orderBy("record_id").limit(maxRecords)
-
-    // P3 — validation with error routing (etl.py:615–652). NULL fields
-    // must fail validation, not slip through a null-valued when():
-    // every predicate is explicitly null-armed.
+  /** P3 — validation with error routing (etl.py:615–652): adds `v_error`
+    * (NULL for a valid event) and the parsed `uid`. NULL fields must
+    * fail validation, not slip through a null-valued when(): every
+    * predicate is explicitly null-armed.
+    */
+  private[etl] def validate(batch: DataFrame, conf: EtlConf): DataFrame = {
     val uidStr = expr("split(table_key, '=', 2)[1]")
-    val validated = batch.withColumn("v_error",
+    batch.withColumn("v_error",
       when(col("event_type").isNull || !col("event_type").isin(4.0, 5.0, 6.0),
         concat(lit(s"Invalid event_type in ${conf.db}: "),
           coalesce(col("event_type").cast("string"), lit("None"))))
@@ -85,7 +100,137 @@ object Cdc {
           concat(lit("Invalid table_key: "), coalesce(uidStr, lit("None")),
             lit(s" in ${conf.db}, expect numeric id"))))
       .withColumn("uid", when(col("v_error").isNull, uidStr.cast("long")))
+  }
 
+  /** C8 — status matrix per valid event (etl.py:689–718). `ev` carries
+    * record_id, uid, event_type, attempt, the per-uid merge aggregates
+    * (pre_matched, pre_dn, add_dn, kernel_error, kernel_warning, row_n
+    * with 0 for a uid without rows) and first_rid, the uid's first
+    * record_id in the batch. Returns one verdict row per event.
+    */
+  private[etl] def verdicts(ev0: DataFrame, conf: EtlConf,
+      readTime: java.sql.Timestamp): DataFrame = {
+    val ev = ev0
+      .withColumn("exists_at",
+        coalesce(col("pre_matched"), lit(false)) ||
+          (col("row_n") > 0 && col("record_id") > col("first_rid")))
+      .withColumn("matched_dn", coalesce(col("pre_dn"), col("add_dn")))
+
+    val isInsert = col("event_type") === 5.0
+    val isDelete = col("event_type") === 4.0
+
+    // base warning: "row exists on delete" overwrites "duplicate rows"
+    // (dict replacement in the reference, etl.py:658–688)
+    val baseW =
+      when(col("row_n") >= 1 && isDelete,
+        concat(lit("Record "), col("uid"), lit(s" existing in DB ${conf.db}")))
+        .when(col("row_n") > 1,
+          concat(lit("Duplicate pk_uniqueid: "), col("uid"),
+            lit(s" in ${conf.db}")))
+    // sync-path warning per event (reconstructed sequencing; see
+    // header). For an insert whose matched entry carries a different
+    // phonlineUniqueId, the reference overwrites "should be new" with
+    // the uid-mismatch text (etl.py:981–989) — so the kernel warning
+    // wins for the first event of the uid, and the reconstruction is
+    // the fallback.
+    val syncW =
+      when(col("row_n") >= 1 && isInsert && col("exists_at"),
+        coalesce(
+          when(col("record_id") === col("first_rid"), col("kernel_warning")),
+          concat(lit("Found dn \""), col("matched_dn"),
+            lit("\" when sync says it should be new"))))
+        .when(col("row_n") >= 1 && !isInsert &&
+            col("record_id") === col("first_rid"), col("kernel_warning"))
+        .when(col("row_n") === 0 && !isDelete,
+          concat(lit("Record "), col("uid"), lit(" not existing in DB")))
+
+    val warnMsg = concat_ws("\n", baseW, syncW)
+    val hasErr = col("kernel_error").isNotNull && col("row_n") >= 1
+    val attemptNow = coalesce(col("attempt"), lit(0.0)).cast("int")
+    val statusCol =
+      when(hasErr && attemptNow > 10, "F")
+        .when(hasErr, "E")
+        .when(length(warnMsg) > 0, "W")
+        .otherwise("S")
+    val errMsgCol =
+      when(hasErr, col("kernel_error"))
+        .when(length(warnMsg) > 0, warnMsg)
+    val attemptCol = when(hasErr, attemptNow + 1)
+
+    ev.select(
+      col("record_id"),
+      statusCol.as("new_status"),
+      errMsgCol.as("new_error"),
+      attemptCol.cast("double").as("new_attempt"),
+      lit(readTime).as("new_read"))
+  }
+
+  /** Verdicts of the events that failed validation: status F with the
+    * validation message. They `continue` before the reference's
+    * read_time stamp (etl.py:615–652 vs 718): no read_time for them.
+    */
+  private[etl] def failedVerdicts(validated: DataFrame): DataFrame =
+    validated.filter(col("v_error").isNotNull)
+      .select(col("record_id"), lit("F").as("new_status"),
+        col("v_error").as("new_error"),
+        lit(null).cast("double").as("new_attempt"),
+        lit(null).cast("timestamp").as("new_read"))
+
+  /** S16 — batched writeback, one idempotent overwrite per cycle. */
+  private[etl] def writeBack(eventlog: DataFrame, allUpdates: DataFrame)
+      : DataFrame =
+    eventlog.alias("e")
+      .join(allUpdates.alias("u"), col("e.record_id") === col("u.record_id"),
+        "left_outer")
+      .select(
+        (eventlog.columns.filterNot(Set("status", "error_message", "attempt",
+          "read_time")).map(c => col("e." + c)) ++ Seq(
+          // the eventlog status column is CHAR(3) — re-pad like the
+          // source database stores it (readEventsCsv does the same)
+          coalesce(rpad(col("u.new_status"), 3, " "), col("e.status"))
+            .as("status"),
+          coalesce(col("u.new_error"), col("e.error_message")).as("error_message"),
+          coalesce(col("u.new_attempt"), col("e.attempt")).as("attempt"),
+          coalesce(col("u.new_read"), col("e.read_time")).as("read_time"))): _*)
+      .select(EtlSchema.eventFields.map(col): _*)
+
+  /** One poll cycle. `users` is the current user table state; `eventlog`
+    * the current event table; returns the post-cycle snapshot and
+    * eventlog. A cap up to `localBatchBound` runs the driver-local body,
+    * a larger one the set-based body (see the object doc).
+    */
+  def cycle(snapshot0: Dataset[Entry], users: DataFrame, eventlog: DataFrame,
+      conf: EtlConf, maxRecords: Int = 100,
+      readTime: java.sql.Timestamp = new java.sql.Timestamp(System.currentTimeMillis / 1000 * 1000))
+      : CycleResult =
+    if (maxRecords <= localBatchBound)
+      LocalCycle.run(snapshot0, users, eventlog, conf, maxRecords, readTime)
+    else cycleSet(snapshot0, users, eventlog, conf, maxRecords, readTime)
+
+  /** The set-based body: every step a join or aggregate over the batch. */
+  private def cycleSet(snapshot0: Dataset[Entry], users: DataFrame,
+      eventlog: DataFrame, conf: EtlConf, maxRecords: Int,
+      readTime: java.sql.Timestamp): CycleResult = {
+    val spark = snapshot0.sparkSession
+    import spark.implicits._
+
+    // C6 — collect already-ETD-synced deleted entries at cycle start;
+    // the reference never garbage-collects the ph15 instance itself
+    // (etl.py:406–407)
+    val snap1 =
+      if (conf.isPh15) snapshot0
+      else SyncEngine.garbageCollect(snapshot0, conf)
+
+    // S3 — bounded work-queue scan. An unbounded batch (Int.MaxValue)
+    // skips the global sort entirely — the cap exists only to emulate
+    // the reference's cycle batching, and a top-2^31 sort would be pure
+    // waste on a process-everything scan.
+    val pendingEv = pendingEvents(eventlog)
+    val batch =
+      if (maxRecords == Int.MaxValue) pendingEv
+      else pendingEv.orderBy("record_id").limit(maxRecords)
+
+    val validated = validate(batch, conf)
     val valid = validated.filter(col("v_error").isNull)
       .select(col("record_id"), col("uid"), col("event_type"),
         col("attempt"))
@@ -163,82 +308,10 @@ object Cdc {
       .withColumn("row_n", coalesce(col("row_n"), lit(0L)))
       .withColumn("first_rid", min(col("record_id")).over(
         Window.partitionBy(col("uid"))))
-      .withColumn("exists_at",
-        coalesce(col("pre_matched"), lit(false)) ||
-          (col("row_n") > 0 && col("record_id") > col("first_rid")))
-      .withColumn("matched_dn", coalesce(col("pre_dn"), col("add_dn")))
 
-    val isInsert = col("event_type") === 5.0
-    val isDelete = col("event_type") === 4.0
-
-    // base warning: "row exists on delete" overwrites "duplicate rows"
-    // (dict replacement in the reference, etl.py:658–688)
-    val baseW =
-      when(col("row_n") >= 1 && isDelete,
-        concat(lit("Record "), col("uid"), lit(s" existing in DB ${conf.db}")))
-        .when(col("row_n") > 1,
-          concat(lit("Duplicate pk_uniqueid: "), col("uid"),
-            lit(s" in ${conf.db}")))
-    // sync-path warning per event (reconstructed sequencing; see
-    // header). For an insert whose matched entry carries a different
-    // phonlineUniqueId, the reference overwrites "should be new" with
-    // the uid-mismatch text (etl.py:981–989) — so the kernel warning
-    // wins for the first event of the uid, and the reconstruction is
-    // the fallback.
-    val syncW =
-      when(col("row_n") >= 1 && isInsert && col("exists_at"),
-        coalesce(
-          when(col("record_id") === col("first_rid"), col("kernel_warning")),
-          concat(lit("Found dn \""), col("matched_dn"),
-            lit("\" when sync says it should be new"))))
-        .when(col("row_n") >= 1 && !isInsert &&
-            col("record_id") === col("first_rid"), col("kernel_warning"))
-        .when(col("row_n") === 0 && !isDelete,
-          concat(lit("Record "), col("uid"), lit(" not existing in DB")))
-
-    val warnMsg = concat_ws("\n", baseW, syncW)
-    val hasErr = col("kernel_error").isNotNull && col("row_n") >= 1
-    val attemptNow = coalesce(col("attempt"), lit(0.0)).cast("int")
-    val statusCol =
-      when(hasErr && attemptNow > 10, "F")
-        .when(hasErr, "E")
-        .when(length(warnMsg) > 0, "W")
-        .otherwise("S")
-    val errMsgCol =
-      when(hasErr, col("kernel_error"))
-        .when(length(warnMsg) > 0, warnMsg)
-    val attemptCol = when(hasErr, attemptNow + 1)
-
-    val evUpdates = ev.select(
-      col("record_id"),
-      statusCol.as("new_status"),
-      errMsgCol.as("new_error"),
-      attemptCol.cast("double").as("new_attempt"),
-      lit(readTime).as("new_read"))
-    // validation failures `continue` before the reference's read_time
-    // stamp (etl.py:615–652 vs 718): no read_time for them
-    val fUpdates = validated.filter(col("v_error").isNotNull)
-      .select(col("record_id"), lit("F").as("new_status"),
-        col("v_error").as("new_error"),
-        lit(null).cast("double").as("new_attempt"),
-        lit(null).cast("timestamp").as("new_read"))
-    val allUpdates = evUpdates.unionByName(fUpdates)
-
-    // S16 — batched writeback, one idempotent overwrite per cycle
-    val updated = eventlog.alias("e")
-      .join(allUpdates.alias("u"), col("e.record_id") === col("u.record_id"),
-        "left_outer")
-      .select(
-        (eventlog.columns.filterNot(Set("status", "error_message", "attempt",
-          "read_time")).map(c => col("e." + c)) ++ Seq(
-          // the eventlog status column is CHAR(3) — re-pad like the
-          // source database stores it (readEventsCsv does the same)
-          coalesce(rpad(col("u.new_status"), 3, " "), col("e.status"))
-            .as("status"),
-          coalesce(col("u.new_error"), col("e.error_message")).as("error_message"),
-          coalesce(col("u.new_attempt"), col("e.attempt")).as("attempt"),
-          coalesce(col("u.new_read"), col("e.read_time")).as("read_time"))): _*)
-      .select(EtlSchema.eventFields.map(col): _*)
+    val allUpdates = verdicts(ev, conf, readTime)
+      .unionByName(failedVerdicts(validated))
+    val updated = writeBack(eventlog, allUpdates)
 
     // C3 — rename queue for the end-of-cycle ph15 pass
     val renames = outcomes.toDF
@@ -252,7 +325,34 @@ object Cdc {
       if (conf.ph15Dn.isEmpty || conf.isPh15) snapFinal
       else ph15Writethrough(snapFinal, newRows0, outcomes.toDF, conf)
 
-    CycleResult(snapWithPh15, updated, allUpdates, renames)
+    CycleResult(snapWithPh15, updated, allUpdates, renames)(batch.count())
+  }
+
+  /** Source columns whose change is written through to the ph15 twin. */
+  private[etl] val writethroughKeys: Seq[String] =
+    EtlSchema.ph15Writethrough :+ "passwort"
+
+  /** The attributes one changed source row writes into its ph15 twin:
+    * the changed write-through columns, the password re-encrypted; an
+    * absent value writes nothing (attributes are never deleted there).
+    */
+  private[etl] def writethroughPatch(newAttrs: Map[String, Seq[String]],
+      pw: Option[String], changedKeys: Seq[String], conf: EtlConf)
+      : Map[String, Seq[String]] = {
+    val attrs = scala.collection.mutable.Map.empty[String, Seq[String]]
+    changedKeys.filter(writethroughKeys.contains).foreach {
+      case "passwort" =>
+        pw.foreach { p =>
+          attrs("idnDistributionPassword") =
+            Seq(Aes.encryptHex(p, conf.aesKey, conf.cryptoIvHex))
+          attrs("userPassword") = Seq("{CRYPT}")
+        }
+      case k =>
+        newAttrs.get(EtlSchema.odbcToLdap(k)).foreach { v =>
+          attrs(EtlSchema.odbcToLdap(k)) = v // never delete in ph15
+        }
+    }
+    attrs.toMap
   }
 
   /** C9 — patch the ph15 twin entry (matched by cn under the ph15 base)
@@ -263,10 +363,9 @@ object Cdc {
   private def ph15Writethrough(snapshot: Dataset[Entry], newRows0: DataFrame,
       outcomes: DataFrame, conf: EtlConf): Dataset[Entry] = {
     import snapshot.sparkSession.implicits._
-    val wt = EtlSchema.ph15Writethrough :+ "passwort"
     val hits = outcomes
       .filter(col("changed") && arrays_overlap(col("changedSrcKeys"),
-        typedLit(wt)))
+        typedLit(writethroughKeys)))
       .select(col("srcCn").as("wt_cn"), col("changedSrcKeys"))
     if (hits.isEmpty) return snapshot
     // one row per cn (case-insensitively, like the merge's cn-dedup,
@@ -283,20 +382,7 @@ object Cdc {
       col("pw_plain"), col("changedSrcKeys"))
       .as[(String, Map[String, Seq[String]], Option[String], Seq[String])]
     val patch = changesDs.map { case (cn, newAttrs, pw, changedKeys) =>
-      val attrs = scala.collection.mutable.Map.empty[String, Seq[String]]
-      changedKeys.filter(wt.contains).foreach {
-        case "passwort" =>
-          pw.foreach { p =>
-            attrs("idnDistributionPassword") =
-              Seq(Aes.encryptHex(p, conf.aesKey, conf.cryptoIvHex))
-            attrs("userPassword") = Seq("{CRYPT}")
-          }
-        case k =>
-          newAttrs.get(EtlSchema.odbcToLdap(k)).foreach { v =>
-            attrs(EtlSchema.odbcToLdap(k)) = v // never delete in ph15
-          }
-      }
-      (s"cn=$cn,${conf.dn15}", attrs.toMap)
+      (s"cn=$cn,${conf.dn15}", writethroughPatch(newAttrs, pw, changedKeys, conf))
     }.toDF("p_dn", "p_attrs")
     // the twin is matched case-insensitively (LDAP caseIgnoreMatch,
     // same rule as the merge's cn match): a case-divergent twin — e.g.

@@ -9,7 +9,9 @@ import graft.etl.Directory.Entry
   *
   *  - round-robin over N (baseDn, db) sources per cycle, each with its
   *    own eventlog table (the reference zips base_dns with databases),
-  *  - batch cap (`maxRecords`) per source per cycle,
+  *  - batch cap (`maxRecords`) per source per cycle; a cap up to
+  *    `Cdc.localBatchBound` (the reference's 100) runs the cycle's
+  *    driver-local body, a larger one the set-based body (`Cdc`),
   *  - **drain rule**: skip the sleep entirely while any source returned
   *    a full batch (backlog catch-up, etl.py:604–606, 419–423),
   *  - end-of-cycle ph15 rename pass (C3),
@@ -45,7 +47,10 @@ object CdcStream {
 
   /** Structured-Streaming form of the CDC loop: eventlog files appended
     * to a directory become micro-batches; `foreachBatch` folds each
-    * batch through `Cdc.cycle` against the current user table, holding
+    * batch through `Cdc.cycle` against the current user table. The
+    * micro-batch IS the batch (`maxRecords = Int.MaxValue`, the
+    * set-based body): a file's events are offered exactly once, so a cap
+    * would leave every event past it without a verdict forever. Holding
     * the snapshot in an atomic reference (at cluster scale this state
     * would live in the copy-on-write snapshot store — Directory.save —
     * with the stream checkpoint carrying only source offsets).
@@ -77,7 +82,7 @@ object CdcStream {
           df.withColumn(c, when(col(c).isNotNull, rpad(col(c), 3, " "))))
         val n = batchNo.incrementAndGet()
         val r = Cdc.cycle(state.get(), users(), padded,
-          conf.copy(etlTimestamp = f"stream$n%04d"))
+          conf.copy(etlTimestamp = f"stream$n%04d"), maxRecords = Int.MaxValue)
         // streaming parity with the poll loop: queued cn renames
         // propagate into the ph15 twin tree at the end of each batch
         val withRenames =
@@ -131,20 +136,23 @@ object CdcStream {
         try {
           val elog = st.eventlogs(src.key)
           val r = Cdc.cycle(st.snapshot, src.users(), elog, conf, maxRecords)
-          // accumulate across sources (the reference's ph15_change_dn
-          // dict grows over the whole cycle and is drained once)
-          if (!r.renames.isEmpty)
-            renameQueue = Some(renameQueue
-              .map(_.unionByName(r.renames).distinct())
-              .getOrElse(r.renames))
           val elogNew = r.eventlog.localCheckpoint(true)
           st = st.copy(
             snapshot = r.snapshot.localCheckpoint(true),
             eventlogs = st.eventlogs + (src.key -> elogNew))
-          backlog += src.key -> pending(elogNew)
-          // full batch ⇔ the cycle selected exactly maxRecords events
-          // (eventUpdates carries one verdict per selected event)
-          if (r.eventUpdates.count() >= maxRecords) anyFull = true
+          // accumulate across sources (the reference's ph15_change_dn
+          // dict grows over the whole cycle and is drained once); read
+          // after the checkpoints, which have materialized the merge
+          // rows the set-based body's queue derives from
+          if (!r.renames.isEmpty)
+            renameQueue = Some(renameQueue
+              .map(_.unionByName(r.renames).distinct())
+              .getOrElse(r.renames))
+          backlog += src.key -> r.pendingAfter.getOrElse(pending(elogNew))
+          // full batch ⇔ the cycle selected exactly maxRecords events (an
+          // uncapped batch is never full)
+          if (maxRecords < Int.MaxValue && r.selected >= maxRecords)
+            anyFull = true
         } catch {
           case scala.util.control.NonFatal(e) =>
             // retain the cause — a silently spinning loop is
